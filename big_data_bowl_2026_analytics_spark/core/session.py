@@ -81,27 +81,29 @@ def local_frame(spark: SparkSession, data, schema: str):
     through a Python worker — measured ~0.25 s per evaluation for a
     5-row grid at sf0.1, pure latency that recurs each time the frame
     feeds a broadcast build or a second plan branch (r14 optimization
-    round, guide §1.2). Routing the same rows through pandas + Arrow
-    yields a LocalRelation evaluated entirely in the JVM (~0.02 s),
-    with identical values, and gives the planner an exact row count
-    for its size estimates.
+    round, guide §1.2). Routing the same rows through Arrow yields a
+    LocalRelation evaluated entirely in the JVM (~0.02 s), with
+    identical values, and gives the planner an exact row count for its
+    size estimates.
 
-    Contract: ``data`` is a list of tuples of ints / floats / strings
-    (exact under the pandas->Arrow conversion — int64/float64/utf8
-    pass through bit-identically); ``schema`` is a DDL string. For
+    Contract: ``data`` is a list of tuples of ints / floats / strings;
+    ``schema`` is a DDL string. Columns convert to the schema's Arrow
+    types with pandas null semantics (NaN becomes null). For
     timestamp/decimal literals keep the plain createDataFrame path.
-    Arrow conversion is enabled at call time (runtime-settable, so a
-    vanilla driver-supplied session gets the fast path too); if Arrow
-    is unavailable createDataFrame falls back to the slow-but-correct
-    path on its own.
+    The rows go in as a ``pyarrow.Table``, which createDataFrame always
+    takes through Arrow, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says — so the
+    caller's session conf is neither needed nor touched.
     """
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType, _parse_datatype_string
 
     st = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:  # noqa: BLE001 - conf may be locked; fallback still works
-        pass
-    pdf = pd.DataFrame(data, columns=[f.name for f in st.fields])
-    return spark.createDataFrame(pdf, schema=st)
+    arrow = to_arrow_schema(st)
+    columns = list(zip(*data)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type, from_pandas=True) for col, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=st)

@@ -272,73 +272,6 @@ def ann_topk_indexed(
     )
 
 
-def brute_force_topk_matmul(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k via Arrow-batched numpy MATMUL — the
-    throughput path when the query set is large enough that the
-    per-pair JVM fold (:func:`brute_force_topk`) turns into m×n
-    scalar expression evaluations: each corpus batch scores against
-    ALL queries in one BLAS ``C @ Q.T`` call and emits only its local
-    top-(k+1) per query, so the shuffle carries ~batches×m×k rows,
-    never m×n.
-
-    The query matrix is collected to the driver and closure-broadcast
-    — bounded by the query set (the same contract as IVF's centroid
-    collect), which is exactly the regime this operator targets
-    (thousands of queries, not a second corpus; for corpus×corpus use
-    the LSH/IVF paths). BLAS reassociates additions, so cosines can
-    differ from the fold in the last ulp: this is the throughput
-    variant, NOT an oracle-hashable one — fold-parity within 1e-9 is
-    asserted in tests instead.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_norm = np.sqrt((Q * Q).sum(axis=1))
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            C = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            c_norm = np.sqrt((C * C).sum(axis=1))
-            S = (C @ Q.T) / (c_norm[:, None] * q_norm[None, :])
-            kk = min(k + 1, S.shape[0])
-            out_q, out_n, out_c = [], [], []
-            for j in range(S.shape[1]):
-                idx = np.argpartition(-S[:, j], kk - 1)[:kk]
-                out_q.extend([qids[j]] * len(idx))
-                out_n.extend(ids[idx])
-                out_c.extend(S[idx, j])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_c}
-            )
-
-    scored = vectors.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
 def int8_quantize(
     df: DataFrame,
     vec_col: str = "embedding",

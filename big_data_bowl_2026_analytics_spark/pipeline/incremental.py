@@ -7,16 +7,25 @@ construction — the reference's own loop proves it — so at 100 TB the
 only sane run shape is: detect which week partitions are new, clean
 JUST those, and append them to the week-partitioned outputs.
 
+Cleaning and scoring are the full run's own stages
+(``pipeline.run.clean_stage`` and ``pipeline.run.score_frames``),
+restricted to the new weeks, so weekly and full scores cannot drift
+apart (the workdir therefore also holds ``plays_cleaned``, the latest
+call's cleaned plays). What is left here is only what is incremental.
+
 Mechanics (plain parquet, no table-format dependency):
 
 - **Progress tracking** is the materialized layout itself: a week is
-  "done" iff its ``week=N`` partition directory exists in the cleaned
-  tracking output. No side manifest that can drift from the data.
-- **Idempotent writes** use dynamic partition overwrite
-  (``partitionOverwriteMode=dynamic``): re-running a week REPLACES its
-  partition instead of duplicating rows — the plain-parquet equivalent
-  of Delta's ``replaceWhere``. A week that failed mid-write is simply
-  re-run.
+  "done" iff its ``week=N`` partition directory exists in
+  ``plays_final_by_week``. No side manifest that can drift from the
+  data. That table is written LAST, after the week's tracking and
+  scores, so a call that fails anywhere before it (cleaning, feature
+  building, scoring) leaves the week unmarked and the next call
+  re-runs it.
+- **Idempotent writes** replace only the partitions present
+  (``write_parquet(replace_partitions=True)``): re-running a week
+  REPLACES its partitions instead of duplicating rows, so a week that
+  failed mid-write is simply re-run.
 - **The players dimension** grows append-only: only ids never seen
   before are added, so existing dim rows are stable across runs.
 - **Scores** land week-partitioned; only new TEST weeks are featurized
@@ -36,20 +45,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ml.inference import score_dataframe
 from ..ml.model import LogisticModel
-from ..ml.train import FEATURE_COLS
-from .cleaning import (
-    clean_plays,
-    clean_tracking,
-    create_players_dim,
-    filter_plays_with_tracking,
-)
-from .features import build_features
+from ..sources.writers import write_parquet
+from .cleaning import create_players_dim
+from .run import clean_stage, score_frames
 from .scores import compute_scores
 
-_TRACKING_BEFORE = "tracking_before_cleaned"
-_TRACKING_AFTER = "tracking_after_cleaned"
 _PLAYS = "plays_final_by_week"
 _PLAYERS = "players"
 _SCORES = "scores_by_week"
@@ -66,9 +67,9 @@ class IncrementalRun:
 
 def processed_weeks(workdir: str) -> set[int]:
     """Weeks already materialized, read from the hive partition layout
-    (a directory listing — no data scan; on object stores this is one
-    LIST call on the table prefix)."""
-    root = os.path.join(workdir, _TRACKING_BEFORE)
+    of the progress marker (a directory listing — no data scan; on
+    object stores this is one LIST call on the table prefix)."""
+    root = os.path.join(workdir, _PLAYS)
     if not os.path.isdir(root):
         return set()
     weeks: set[int] = set()
@@ -77,19 +78,6 @@ def processed_weeks(workdir: str) -> set[int]:
         if m:
             weeks.add(int(m.group(1)))
     return weeks
-
-
-def _write_week_partitions(df: DataFrame, path: str, sort_cols: list[str] | None = None) -> None:
-    """Week-partitioned parquet write that replaces exactly the
-    partitions present in ``df`` (dynamic partition overwrite)."""
-    if sort_cols:
-        df = df.sortWithinPartitions(*sort_cols)
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("week")
-        .parquet(path)
-    )
 
 
 def run_incremental(
@@ -129,60 +117,35 @@ def run_incremental(
         to_add = fresh_players.join(existing, "nfl_id", "left_anti")
         n_new_players = to_add.count()
         if n_new_players:
-            to_add.write.mode("append").parquet(players_path)
+            write_parquet(to_add, players_path, mode="append")
     else:
-        fresh_players.write.mode("overwrite").parquet(players_path)
+        write_parquet(fresh_players, players_path)
         n_new_players = fresh_players.count()
     players = spark.read.parquet(players_path)
 
-    # Clean the new weeks only — the same stage operators as the full
-    # run; weekly independence makes the restriction exact.
-    cleaned_plays = clean_plays(np_, nb)
-    before_clean, after_clean = clean_tracking(nb, na, cleaned_plays, np_, players)
-    _write_week_partitions(
-        before_clean,
-        os.path.join(workdir, _TRACKING_BEFORE),
-        sort_cols=["game_id", "play_id", "frame_id"],
+    # Weekly independence makes the restriction to new weeks exact.
+    _, before_clean, _, final_plays = clean_stage(
+        spark, nb, na, np_, players, workdir, weeks=new_weeks
     )
-    _write_week_partitions(
-        after_clean,
-        os.path.join(workdir, _TRACKING_AFTER),
-        sort_cols=["game_id", "play_id", "frame_id"],
-    )
-    before_clean = spark.read.parquet(os.path.join(workdir, _TRACKING_BEFORE)).where(
-        F.col("week").isin(new_weeks)
-    )
-
-    final_plays = filter_plays_with_tracking(cleaned_plays, before_clean)
-    _write_week_partitions(final_plays, os.path.join(workdir, _PLAYS))
 
     # Score the new TEST weeks (train weeks produce no scores).
     scored_weeks = [w for w in new_weeks if w > train_weeks]
     if scored_weeks:
         test_before = before_clean.where(F.col("week").isin(scored_weeks))
         test_plays = final_plays.where(F.col("week").isin(scored_weeks))
-        feats = build_features(test_before, test_plays, per_frame=True)
-        scored = score_dataframe(
-            feats.na.fill(0, list(FEATURE_COLS)),
-            model,
-            output_col="non_completion_probability",
-        )
-        results = scored.select(
-            "game_id",
-            "play_id",
-            "frame_id",
-            "receiver_id",
-            "defender_id",
-            F.col("target").alias("pass_result"),
-            "non_completion_probability",
-        )
-        scores = compute_scores(results).join(
+        scores = compute_scores(score_frames(test_before, test_plays, model)).join(
             F.broadcast(test_plays.select("game_id", "play_id", "week")),
             ["game_id", "play_id"],
             "inner",
         )
-        _write_week_partitions(scores, os.path.join(workdir, _SCORES))
+        write_parquet(
+            scores, os.path.join(workdir, _SCORES), partition_by=["week"], replace_partitions=True
+        )
 
+    # The progress marker goes last: see the module docstring.
+    write_parquet(
+        final_plays, os.path.join(workdir, _PLAYS), partition_by=["week"], replace_partitions=True
+    )
     return IncrementalRun(
         new_weeks=tuple(new_weeks),
         scored_weeks=tuple(scored_weeks),

@@ -7,6 +7,10 @@ both the reference's CSV hand-offs and what a 100 TB run needs anyway:
 restartability, lineage truncation, and partition-pruned downstream
 reads (a week-range predicate prunes files instead of scanning 18
 weeks to keep 9).
+
+The cleaning and scoring stages (``clean_stage``, ``score_frames``) are
+the weekly run's too (``pipeline/incremental.py``), so full and weekly
+scores come from one code path.
 """
 
 from __future__ import annotations
@@ -31,6 +35,10 @@ from .features import build_features, train_test_split_by_week
 from .scores import compute_scores
 
 
+#: Row order inside each week partition of the cleaned tracking.
+_FRAME_ORDER = ["game_id", "play_id", "frame_id"]
+
+
 @dataclass
 class PipelineResult:
     players: DataFrame
@@ -43,6 +51,74 @@ class PipelineResult:
     scores: DataFrame
 
 
+def clean_stage(
+    spark: SparkSession,
+    raw_before: DataFrame,
+    raw_after: DataFrame,
+    raw_plays: DataFrame,
+    players: DataFrame,
+    workdir: str,
+    *,
+    weeks: list[int] | None,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """Stages 2-3: cleaned plays (reference plays.py:198-229), cleaned
+    tracking written week-partitioned for pruned reads (reference
+    tracking.py:456-549 writes per-week CSVs), and the final plays ⋉
+    tracking sync (reference plays.py:232-300).
+
+    Returns ``(cleaned_plays, before_clean, after_clean, final_plays)``,
+    each read back from ``workdir`` except ``final_plays``, which the
+    caller writes. ``weeks=None`` is the full run; a list of weeks
+    restricts the run to them: the tracking writes replace only their
+    partitions and the read-backs keep only them. ``plays_cleaned`` is
+    always rewritten whole.
+    """
+
+    def reread(name: str) -> DataFrame:
+        df = spark.read.parquet(os.path.join(workdir, name))
+        return df if weeks is None else df.where(F.col("week").isin(weeks))
+
+    write_parquet(clean_plays(raw_plays, raw_before), os.path.join(workdir, "plays_cleaned"))
+    cleaned_plays = spark.read.parquet(os.path.join(workdir, "plays_cleaned"))
+
+    tracking = clean_tracking(raw_before, raw_after, cleaned_plays, raw_plays, players)
+    for df, name in zip(tracking, ("tracking_before_cleaned", "tracking_after_cleaned")):
+        write_parquet(
+            df,
+            os.path.join(workdir, name),
+            partition_by=["week"],
+            sort_within_partitions=_FRAME_ORDER,
+            replace_partitions=weeks is not None,
+        )
+    before_clean = reread("tracking_before_cleaned")
+    after_clean = reread("tracking_after_cleaned")
+    # Never overwrite a path being read: the caller writes final plays
+    # to a NEW location.
+    final_plays = filter_plays_with_tracking(cleaned_plays, before_clean)
+    return cleaned_plays, before_clean, after_clean, final_plays
+
+
+def score_frames(before_clean: DataFrame, plays: DataFrame, model: LogisticModel) -> DataFrame:
+    """Stage 6: per-frame inference features scored by ``model``
+    (reference inference/create_dataset.py:153-165 builds them from
+    cleaned BEFORE-throw tracking + inference.py), projected to the
+    reference's inference-results columns."""
+    feats = build_features(before_clean, plays, per_frame=True)
+    scored = score_dataframe(
+        feats.na.fill(0, list(FEATURE_COLS)), model,
+        output_col="non_completion_probability",
+    )
+    return scored.select(
+        "game_id",
+        "play_id",
+        "frame_id",
+        "receiver_id",
+        "defender_id",
+        F.col("target").alias("pass_result"),
+        "non_completion_probability",
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     raw_before: DataFrame,
@@ -50,14 +126,13 @@ def run_pipeline(
     raw_plays: DataFrame,
     workdir: str,
     train_weeks: int = 9,
-    validate: bool = True,
 ) -> PipelineResult:
     """Run the full flow, materializing each stage under ``workdir``.
 
-    ``validate`` runs the reference's runtime data contracts
-    (SURVEY §1.4) as engine-level checks at stage boundaries: unique
-    players key + positive weights (players.py:57-84), pass_result
-    domain (recovery.py:10-16), m:1 dim-side uniqueness.
+    The reference's runtime data contracts (SURVEY §1.4) run as
+    engine-level checks at stage boundaries: unique players key +
+    positive weights (players.py:57-84), pass_result domain
+    (recovery.py:10-16), m:1 dim-side uniqueness.
     """
     from ..operators.quality import (
         assert_no_nulls,
@@ -69,45 +144,17 @@ def run_pipeline(
     players = create_players_dim(raw_before)
     write_parquet(players, os.path.join(workdir, "players"))
     players = spark.read.parquet(os.path.join(workdir, "players"))
-    if validate:
-        assert_unique_key(players, ["nfl_id"], label="players dim")
-        assert_no_nulls(players, ["nfl_id"], label="players dim")
+    assert_unique_key(players, ["nfl_id"], label="players dim")
+    assert_no_nulls(players, ["nfl_id"], label="players dim")
 
-    # Stage 2 — cleaned plays (reference plays.py:198-229).
-    cleaned_plays = clean_plays(raw_plays, raw_before)
-    write_parquet(cleaned_plays, os.path.join(workdir, "plays_cleaned"))
-    cleaned_plays = spark.read.parquet(os.path.join(workdir, "plays_cleaned"))
-
-    # Stage 3 — cleaned tracking, week-partitioned for pruned reads
-    # (reference tracking.py:456-549 writes per-week CSVs).
-    before_clean, after_clean = clean_tracking(
-        raw_before, raw_after, cleaned_plays, raw_plays, players
+    # Stages 2-3 — cleaned plays and tracking, final plays.
+    cleaned_plays, before_clean, after_clean, final_plays = clean_stage(
+        spark, raw_before, raw_after, raw_plays, players, workdir, weeks=None
     )
-    write_parquet(
-        before_clean,
-        os.path.join(workdir, "tracking_before_cleaned"),
-        partition_by=["week"],
-        sort_within_partitions=["game_id", "play_id", "frame_id"],
-    )
-    write_parquet(
-        after_clean,
-        os.path.join(workdir, "tracking_after_cleaned"),
-        partition_by=["week"],
-        sort_within_partitions=["game_id", "play_id", "frame_id"],
-    )
-    before_clean = spark.read.parquet(os.path.join(workdir, "tracking_before_cleaned"))
-    after_clean = spark.read.parquet(os.path.join(workdir, "tracking_after_cleaned"))
-
-    # Final plays ⋉ tracking sync (reference plays.py:232-300) — to a
-    # NEW location, then reread: never overwrite a path being read.
-    final_plays = filter_plays_with_tracking(cleaned_plays, before_clean)
     write_parquet(final_plays, os.path.join(workdir, "plays_final"))
     final_plays = spark.read.parquet(os.path.join(workdir, "plays_final"))
-    if validate:
-        assert_unique_key(final_plays, ["game_id", "play_id"], label="final plays")
-        assert_values_in(
-            final_plays, "pass_result", ["C", "I", "IN"], label="final plays"
-        )
+    assert_unique_key(final_plays, ["game_id", "play_id"], label="final plays")
+    assert_values_in(final_plays, "pass_result", ["C", "I", "IN"], label="final plays")
 
     # Stage 4 — play-grain features, week-range split
     # (reference create_datasets.py:94-111).
@@ -121,25 +168,8 @@ def run_pipeline(
     # Stage 5 — grid-search training (reference train.py:125-181).
     fit = grid_search(train, test)
 
-    # Stage 6 — per-frame inference features + distributed scoring
-    # (reference inference/create_dataset.py:153-165 builds them from
-    # cleaned BEFORE-throw tracking of the test weeks + inference.py).
-    inference_feats = build_features(
-        before_clean.where(F.col("week") > train_weeks), final_plays, per_frame=True
-    )
-    scored = score_dataframe(
-        inference_feats.na.fill(0, list(FEATURE_COLS)), fit.model,
-        output_col="non_completion_probability",
-    )
-    results = scored.select(
-        "game_id",
-        "play_id",
-        "frame_id",
-        "receiver_id",
-        "defender_id",
-        F.col("target").alias("pass_result"),
-        "non_completion_probability",
-    )
+    # Stage 6 — distributed scoring of the test weeks.
+    results = score_frames(before_clean.where(F.col("week") > train_weeks), final_plays, fit.model)
     write_parquet(results, os.path.join(workdir, "inference_results"))
     results = spark.read.parquet(os.path.join(workdir, "inference_results"))
 

@@ -20,6 +20,7 @@ def write_parquet(
     partition_by: Sequence[str] | None = None,
     mode: str = "overwrite",
     sort_within_partitions: Sequence[str] | None = None,
+    replace_partitions: bool = False,
 ) -> None:
     """Parquet sink; optional hive-style partitioning + in-file ordering.
 
@@ -27,10 +28,17 @@ def write_parquet(
     (game_id, play_id, frame_id)) so min/max statistics stay selective
     for point lookups — the scalable replacement for the reference's
     sorted CSV output (tracking.py:529-536).
+
+    ``replace_partitions`` overwrites only the partitions present in
+    ``df`` and keeps the others (dynamic partition overwrite, the
+    plain-parquet equivalent of Delta's ``replaceWhere``), so rewriting
+    a week replaces its rows instead of duplicating them.
     """
     if sort_within_partitions:
         df = df.sortWithinPartitions(*sort_within_partitions)
     writer = df.write.mode(mode)
+    if replace_partitions:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

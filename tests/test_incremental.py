@@ -7,8 +7,10 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
+from big_data_bowl_2026_analytics_spark.ml.model import LogisticModel
 from big_data_bowl_2026_analytics_spark.pipeline.incremental import (
     processed_weeks,
     read_scores,
@@ -107,7 +109,7 @@ def test_rerun_of_failed_week_replaces_partition(spark, raw, tmp_path_factory):
     # Simulate "week 10 needs reprocessing": drop its partition dir.
     import shutil
 
-    shutil.rmtree(os.path.join(inc_dir, "tracking_before_cleaned", "week=10"))
+    shutil.rmtree(os.path.join(inc_dir, "plays_final_by_week", "week=10"))
     assert processed_weeks(inc_dir) == {1}
 
     r = run_incremental(spark, before, after, plays, inc_dir, full.model)
@@ -117,6 +119,33 @@ def test_rerun_of_failed_week_replaces_partition(spark, raw, tmp_path_factory):
         spark.read.parquet(os.path.join(inc_dir, "tracking_before_cleaned")).count()
         == rows1
     )
+
+
+def test_week_that_failed_in_scoring_is_rerun(spark, raw, tmp_path_factory):
+    """A call that dies while scoring leaves its weeks unmarked: the
+    next call re-runs them and lands the full run's scores."""
+    before, after, plays = raw
+    inc_dir = str(tmp_path_factory.mktemp("crash"))
+    full_dir = str(tmp_path_factory.mktemp("crash_model"))
+    full = run_pipeline(spark, before, after, plays, full_dir, train_weeks=9)
+
+    # One weight short: ``X @ weights`` raises inside the scoring UDF,
+    # after the week's tracking is already written.
+    m = full.model
+    broken = LogisticModel(weights=m.weights[:-1], bias=m.bias, feature_cols=m.feature_cols)
+    with pytest.raises(PythonException):
+        run_incremental(spark, before, after, plays, inc_dir, broken)
+    assert os.path.isdir(os.path.join(inc_dir, "tracking_before_cleaned", "week=10"))
+    assert processed_weeks(inc_dir) == set()
+
+    r = run_incremental(spark, before, after, plays, inc_dir, full.model)
+    assert r.new_weeks == (1, 10)
+    assert r.scored_weeks == (10,)
+    assert processed_weeks(inc_dir) == {1, 10}
+    cols = ["game_id", "play_id", "defender_id", "receiver_id", "deception_score", "recovery_score"]
+    inc_scores = sorted(tuple(row[c] for c in cols) for row in read_scores(spark, inc_dir).collect())
+    full_scores = sorted(tuple(row[c] for c in cols) for row in full.scores.collect())
+    assert inc_scores == full_scores
 
 
 def test_players_dim_grows_append_only(spark, raw, tmp_path_factory):

@@ -305,57 +305,3 @@ def test_int8_quantize_zero_vector(spark):
     got = {r.vec_id: r for r in int8_quantize(df).collect()}
     assert got[1].scale == 0.0 and got[1].qvec == [0] * 8
     assert got[2].qvec == [127] * 8
-
-
-def test_matmul_topk_matches_fold_topk(spark, sf_dir):
-    # BLAS path returns the same neighbors as the JVM fold (scores
-    # within 1e-9; random data has no exact rank ties).
-    from big_data_bowl_2026_analytics_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_matmul,
-    )
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
-    fold = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in brute_force_topk(emb, queries, k=4).collect()
-    }
-    blas = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in brute_force_topk_matmul(emb, queries, k=4).collect()
-    }
-    assert fold.keys() == blas.keys()
-    for key, (nid, cos) in fold.items():
-        bnid, bcos = blas[key]
-        assert bnid == nid
-        # the fold path rounds to 6 decimals for its oracle; matmul
-        # is unrounded — agreement within the rounding quantum.
-        assert abs(bcos - cos) < 1e-6
-
-
-def test_matmul_topk_local_prune_survives_small_batches(spark):
-    # force many tiny Arrow batches: per-batch top-(k+1) pruning must
-    # still produce the exact global top-k.
-    import numpy as np
-
-    from big_data_bowl_2026_analytics_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_matmul,
-    )
-
-    rng = np.random.RandomState(3)
-    rows = [(i, [float(x) for x in rng.randn(16)]) for i in range(200)]
-    vecs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>"
-    ).repartition(16)
-    q = vecs.where(F.col("vec_id") < 2)
-    fold = {
-        (r.query_id, r.rank, r.neighbor_id)
-        for r in brute_force_topk(vecs, q, k=5).collect()
-    }
-    blas = {
-        (r.query_id, r.rank, r.neighbor_id)
-        for r in brute_force_topk_matmul(vecs, q, k=5).collect()
-    }
-    assert fold == blas

@@ -12,7 +12,9 @@ round, so a regression fails CI instead of a verdict:
 3. ``.toPandas()`` only in the deliberately driver-side ML grid
    search (SURVEY §2.9 U6);
 4. no bare ``except:`` (always name the exception class);
-5. every module compiles under ``ast.parse`` (syntax gate).
+5. every module compiles under ``ast.parse`` (syntax gate);
+6. no ``DataFrame.write`` under ``pipeline/`` — pipeline stage writes
+   go through ``sources.writers``, the one place write options live.
 """
 
 from __future__ import annotations
@@ -116,3 +118,14 @@ def test_no_bare_except():
             if isinstance(node, ast.ExceptHandler) and node.type is None:
                 offenders.append(f"{rel}:{node.lineno}")
     assert not offenders, f"bare except: {offenders}"
+
+
+def test_pipeline_writes_go_through_sources_writers():
+    offenders = []
+    for rel, tree in _parsed():
+        if not rel.startswith("pipeline/"):
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "write":
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"direct DataFrame.write in pipeline/: {offenders}"
